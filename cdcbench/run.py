@@ -200,6 +200,7 @@ def main(argv: list[str]) -> int:
             ship_s = time.time() - t
             wl.spark = spark
             wl.warmup()
+            settle(spark)
             timing_begins = time.time()
             setup_s = timing_begins - PROCESS_START - gen_s
 
@@ -266,6 +267,15 @@ def main(argv: list[str]) -> int:
         "metrics": {k: {"value": v, "unit": units[k]}
                     for k, v in metrics.items()}}))
     return 0 if correct else 1
+
+
+def settle(spark) -> None:
+    """Collect garbage in the JVM and here before timing begins, so a
+    collection the warm-up left pending does not land in the timed
+    region of one run but not of another."""
+    import gc
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
 
 
 def stop_spark(spark) -> None:

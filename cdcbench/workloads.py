@@ -225,7 +225,8 @@ class MultiCatchup(Workload):
 
     name = "multi_minimal_catchup"
     N_CHANGES = 9_000
-    WARM_CHANGES = 1_000
+    #: three spans, so the warm-up applies in three batches
+    WARM_CHANGES = 700
     BATCHES = 3
     NOMINAL_S = 20.0
 
@@ -248,11 +249,16 @@ class MultiCatchup(Workload):
         self.file_batch = last
 
     def warmup(self) -> None:
+        """One span per batch, so the warm-up takes the timed calls' path:
+        the first batch creates the tables and the rest merge into them.
+        A one-batch warm-up leaves those merges cold, and the first timed
+        call then pays for their JIT compilation."""
         from binlog_spark.cdc.multi import replay_generic
         lake = self.lake("warm")
         t = time.time()
         try:
-            tables = replay_generic(self.spark, self.warm, lake)
+            tables = replay_generic(self.spark, self.warm, lake,
+                                    chunks_per_batch=1)
         except Exception:
             _failed(self.tally, "warm-up apply")
             raise
@@ -313,27 +319,43 @@ class MultiCatchup(Workload):
 
 class StreamTail(Workload):
     """``streaming.tail.stream_apply`` tailing a directory that one
-    publisher thread fills on a fixed schedule (open loop)."""
+    publisher thread fills on a fixed schedule (open loop).
+
+    One 4 MB file arrives every ``INTERVAL_S`` seconds.  A micro-batch
+    takes less than that, so each file becomes exactly one micro-batch
+    whatever the host's speed.  With small files arriving faster, the
+    files of a run fell into a number of micro-batches that depended on
+    how fast the batches ran, and the freshness, batch latency and write
+    amplification of a run jumped with that count."""
 
     name = "repo_stream_tail"
-    FILE_BYTES = 256 << 10
+    FILE_BYTES = 4 << 20
     #: seconds between two published files
-    INTERVAL = 1.0
-    #: changes per published file at FILE_BYTES under GenConfig defaults
-    CHANGES_PER_FILE = 95
+    INTERVAL_S = 8.0
+    #: changes per full file at FILE_BYTES under GenConfig defaults
+    CHANGES_PER_FILE = 1460
     #: warm-up files, one micro-batch each: the first creates the table,
     #: the second takes the incremental-merge path
     WARM_FILES = 2
     #: longest wait for the last file's commit after the schedule ends
     DRAIN_S = 60.0
 
+    def timed_files(self) -> int:
+        """Files due within ``--seconds``: at 0, INTERVAL_S, ..."""
+        return max(2, int(self.seconds // self.INTERVAL_S) + 1)
+
     def prepare(self) -> None:
-        n_files = self.WARM_FILES + max(2, round(self.seconds
-                                                 / self.INTERVAL))
+        n_files = self.WARM_FILES + self.timed_files()
+        # half a file short of n_files full ones: the generator rotates by
+        # bytes, and this leaves the file count the same for every seed
         self.dump = fixtures.repo_dump(
-            self.work, self.seed, n_files * self.CHANGES_PER_FILE,
+            self.work, self.seed,
+            round((n_files - 0.5) * self.CHANGES_PER_FILE),
             max_file_bytes=self.FILE_BYTES)
         self.descriptors = fixtures.load_descriptors(self.dump)
+        if self.descriptors["files"] != n_files:
+            raise RuntimeError(f"fixture has {self.descriptors['files']} "
+                               f"binlog files, not {n_files}")
         self.binlog_bytes = self.descriptors["binlog_bytes"]
         self.files = fixtures.binlog_files(self.dump)
         self.watch = os.path.join(self.scratch, "watch")
@@ -358,9 +380,13 @@ class StreamTail(Workload):
             # alternate traced and bare micro-batches
             self.tracer.enable(self.traced(batch_id + 1))
 
-    def _publish(self, name: str) -> None:
+    def _stage(self, name: str) -> str:
+        """Copy a file in under a hidden name, which the stream skips."""
         tmp = os.path.join(self.watch, f".{name}.tmp")
         shutil.copyfile(os.path.join(self.dump, name), tmp)
+        return tmp
+
+    def _publish(self, name: str, tmp: str) -> None:
         os.rename(tmp, os.path.join(self.watch, name))
 
     def _wait(self, names: list[str], timeout: float) -> bool:
@@ -384,7 +410,7 @@ class StreamTail(Workload):
             on_batch=self._on_batch)
         for name in self.files[:self.WARM_FILES]:
             t = time.time()
-            self._publish(name)
+            self._publish(name, self._stage(name))
             ok = self._wait([name], 180.0)
             self.first_apply_s = self.first_apply_s or time.time() - t
             if not self.tally.record("warm-up file", ok, "never committed"):
@@ -393,16 +419,17 @@ class StreamTail(Workload):
     def measure(self) -> None:
         s = self.samples
         timed = self.files[self.WARM_FILES:]
-        interval = self.seconds / len(timed)
-        start = time.time() + interval
+        start = time.time() + 1.0
 
         def publisher() -> None:
             for k, name in enumerate(timed):
-                due = start + k * interval
+                due = start + k * self.INTERVAL_S
+                # the copy ahead of time; at the due time only the rename
+                tmp = self._stage(name)
                 delay = due - time.time()
                 if delay > 0:
                     time.sleep(delay)
-                self._publish(name)
+                self._publish(name, tmp)
                 self.published[name] = (due, time.time())
 
         c0 = tree_cpu_sec()
@@ -411,18 +438,36 @@ class StreamTail(Workload):
         pub.join()
         drained = self._wait(timed, self.DRAIN_S)
         s.cpu_s = tree_cpu_sec() - c0
+        if drained:
+            self._wait_progress(timed, 10.0)
         if self.tracer:
             self.tracer.enable(False)
         self.query.stop()
-        self._account(timed, drained, interval)
+        self._account(timed, drained)
 
-    def _account(self, timed: list[str], drained: bool,
-                 interval: float) -> None:
+    def _progress(self) -> dict[int, dict]:
+        """Progress reports of the micro-batches that read files."""
+        return {p["batchId"]: p for p in self.query.recentProgress
+                if p.get("numInputRows")}
+
+    def _wait_progress(self, names: list[str], timeout: float) -> None:
+        """Until the micro-batches holding ``names`` have reported their
+        progress: a batch commits in ``on_batch`` before its progress
+        report is posted, and stopping the query in between loses the
+        report, and with it the batch's start time."""
+        end = time.time() + timeout
+        while time.time() < end:
+            where = source_log_batches(self.ckpt)
+            if {where[n][0] for n in names if n in where} <= set(
+                    self._progress()):
+                return
+            time.sleep(0.05)
+
+    def _account(self, timed: list[str], drained: bool) -> None:
         s = self.samples
         per_file = self.descriptors["changes_per_file"]
         where = source_log_batches(self.ckpt)
-        progress = {p["batchId"]: p for p in self.query.recentProgress
-                    if p.get("numInputRows")}
+        progress = self._progress()
         first = {n: where[n][0] for n in timed if n in where}
         timed_batches = sorted(set(first.values()))
         for name in timed:
@@ -435,12 +480,14 @@ class StreamTail(Workload):
                                    - self.published[name][0])
         busy = 0.0
         for b in timed_batches:
-            if not self.tally.record("micro-batch", b in self.commits,
-                                     f"batch {b} never committed"):
+            if not self.tally.record(
+                    "micro-batch", b in self.commits and b in progress,
+                    f"batch {b} " + ("has no progress report"
+                                     if b in self.commits
+                                     else "never committed")):
                 continue
             commit, snap = self.commits[b]
-            begin = progress.get(b, {}).get("timestamp")
-            start = _iso_epoch(begin) if begin else commit
+            start = _iso_epoch(progress[b]["timestamp"])
             s.batch_latency.append(commit - start)
             s.windows.append((start, commit, self.traced(b)))
             busy += commit - start
@@ -452,10 +499,10 @@ class StreamTail(Workload):
         lateness = [a - d for d, a in self.published.values()]
         s.extra = {
             "drained": drained,
-            "interval_s": round(interval, 4),
+            "interval_s": self.INTERVAL_S,
             "files_published": len(timed),
             "generator_lateness_max_s": round(max(lateness), 4),
-            "open_loop_ok": max(lateness) < interval,
+            "open_loop_ok": max(lateness) < self.INTERVAL_S,
             "backlog_max_files": backlog_max(
                 [self.published[n][0] for n in timed],
                 [self.commits[first[n]][0] for n in timed
