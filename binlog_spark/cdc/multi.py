@@ -23,6 +23,12 @@ Scale shape:
     commit order (cdc.pipeline.pack_ord): one read of the table's staged
     partition, map-side partial aggregation discards losing rows before
     the shuffle — only winner rows ever shuffle
+
+``apply_generic_batch`` is the multi-table apply core: generic decode →
+``stage_events`` → ``apply_staged_batch`` (per-table routed reduction and
+MERGE) → staging-dir removal, also when a merge raises.  Two thin loops
+drive it: ``replay_generic`` over deterministic chunk-range batches, and
+streaming.tail.stream_apply_multi over micro-batches of file blobs.
 """
 
 from __future__ import annotations
@@ -40,7 +46,8 @@ from ..decoder.chunks import chunks_df, spans_df
 from ..decoder.generic import decode_changes_vals
 from ..lake.table import LakeTable
 from .pipeline import pack_ord
-from .replay import _batch_id, plan_batches
+from .replay import (_batch_id, batch_broadcast, manifest_wide_order,
+                     plan_batches, span_offsets)
 
 _REGISTRY_SCHEMA = StructType([
     StructField("table_schema", StringType(), False),
@@ -267,7 +274,6 @@ _META = ("log_file", "log_pos", "seq_in_tx")
 
 def table_upserts(staged: DataFrame, columns: list[str], pk: list[str],
                   types: list[list] | None = None, *,
-                  broadcast_winners: bool = True,
                   wide_order: bool = False) -> DataFrame:
     """Generic-event rows of ONE table → reduced upsert batch keyed by pk.
 
@@ -276,10 +282,7 @@ def table_upserts(staged: DataFrame, columns: list[str], pk: list[str],
     cast to the lake's typed columns; the key-change tombstone explode of
     cdc.pipeline.with_key_change_tombstones generalizes to arbitrary
     keys; then a single-pass packed-order argmax (see the winner-search
-    comment below).
-
-    ``broadcast_winners`` is accepted for API compatibility; the
-    single-pass argmax has no separate winner set to broadcast."""
+    comment below)."""
     payload = [c for c in columns if c not in pk]
     a_cols = [f"_a_{c}" for c in columns]
     b_cols = [f"_b_{c}" for c in pk]
@@ -372,10 +375,7 @@ def table_upserts_minimal(staged: DataFrame, columns: list[str],
     present and the before image otherwise (the before/WHERE image always
     carries the pk).  Output: one row per touched key plus the patch
     metadata LakeTable.merge consumes — ``present_cols`` (csv of resolved
-    REAL column names) and ``base_{pk}`` chain-origin keys.
-
-    Callers must release the core's persisted decode after the terminal
-    action: ``cdc.pipeline.release_minimal(result)``."""
+    REAL column names) and ``base_{pk}`` chain-origin keys."""
     from .pipeline import _minimal_core, with_key_change_tombstones
 
     payload = [c for c in columns if c not in pk]
@@ -450,7 +450,6 @@ def table_upserts_minimal(staged: DataFrame, columns: list[str],
                  typed(F.element_at(barr, i + 1), k)).alias(f"base_{k}")
           for i, k in enumerate(pk)],
         *_META, "gtid", "ts_sec")
-    out._persisted_source = up._persisted_source
     return out
 
 
@@ -522,35 +521,19 @@ def ensure_tables(lake_root: str, registry: dict, *,
 
 
 def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
-                       tables: dict, bid: str, *,
+                       tables: dict, bid: str, *, partial_tables: set,
                        offsets: dict | None = None,
                        broadcast_winners: bool = True,
-                       wide_order: bool = False,
-                       partial_tables: set | None = None) -> None:
+                       wide_order: bool = False) -> None:
     """Merge one staged batch (parquet partitioned by schema/table) into
-    every table — shared by batch replay and the streaming tail.
+    every table.
 
     Tables with MINIMAL (partial) row images in this batch route to the
     per-column reduction; FULL tables keep the cheap row-level winner
     search.  ``partial_tables``: the (schema, table) set stage_events
-    observed during the staging write; when None (a caller that staged
-    out-of-band), one column-pruned scan of the staged parquet's two
-    presence strings decides — not a per-table probe job."""
-    # a batch of only statement/DDL transactions (or all-bad-CRC rows)
-    # stages ZERO row events: the partitioned dir holds no part files
-    # and parquet can't infer a schema from it — every table then takes
-    # the empty-merge branch below, which still commits the batch id
-    if partial_tables is None:
-        has_rows = os.path.isdir(staging) and any(
-            n.startswith("table_schema=") for n in os.listdir(staging))
-        partial_tables = set() if not has_rows else {
-            (r.table_schema, r.table_name)
-            for r in (spark.read.parquet(staging)
-                      .where(F.col("after_present").isNotNull()
-                             | F.col("before_present").isNotNull())
-                      .select("table_schema", "table_name")
-                      .distinct().collect())}
-
+    observed during the staging write.  A table with no staged rows (a
+    batch of only statement/DDL transactions stages none) commits the
+    batch id with an empty merge."""
     def apply_table(item) -> None:
         (sch, tbl), t = item
         if bid in t.committed_batch_ids():
@@ -568,23 +551,14 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
             return
         pk = list(t.key_cols)
         if (sch, tbl) in partial_tables:
-            from .pipeline import release_minimal
             up = table_upserts_minimal(
                 spark.read.parquet(part), info["columns"], pk,
                 info["types"], broadcast_winners=broadcast_winners,
                 wide_order=wide_order)
-            try:
-                t.merge(spark, up, batch_id=bid, offsets=offsets)
-            finally:
-                # release even when the merge raises — a retrying
-                # caller would otherwise stack one cached decode per
-                # attempt
-                release_minimal(up)
-            return
-        up = table_upserts(spark.read.parquet(part),
-                           info["columns"], pk, info["types"],
-                           broadcast_winners=broadcast_winners,
-                           wide_order=wide_order)
+        else:
+            up = table_upserts(spark.read.parquet(part),
+                               info["columns"], pk, info["types"],
+                               wide_order=wide_order)
         t.merge(spark, up, batch_id=bid, offsets=offsets)
 
     # per-table applies are independent (own lake roots, own
@@ -602,9 +576,33 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
             apply_table(item)
 
 
+def apply_generic_batch(spark: SparkSession, source: DataFrame,
+                        staging: str, registry: dict, tables: dict,
+                        bid: str, *, partitions: int | None = None,
+                        est_bytes: int | None = None,
+                        offsets: dict | None = None,
+                        broadcast_winners: bool = True,
+                        wide_order: bool = False) -> None:
+    """Apply one batch of binlog bytes to every table of ``tables``.
+
+    ``source`` is what the generic decoder reads: chunk spans or raw file
+    blobs.  The batch decodes ONCE into ``staging`` (partitioned by
+    table, see stage_events), every table merges its own partition, and
+    the staging dir is removed afterwards, also when a merge raises (a
+    retry re-stages it from scratch)."""
+    events = decode_changes_vals(source, partitions=partitions)
+    try:
+        partials = stage_events(events, staging, est_bytes=est_bytes)
+        apply_staged_batch(spark, staging, registry, tables, bid,
+                           partial_tables=partials, offsets=offsets,
+                           broadcast_winners=broadcast_winners,
+                           wide_order=wide_order)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
 def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
                    chunks_per_batch: int | None = None,
-                   partitions: int | None = None,
                    n_buckets: int = 8,
                    broadcast_winners: bool | None = None,
                    wide_order: bool | None = None) -> dict:
@@ -616,17 +614,13 @@ def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
     mid-batch (a crash between two tables' merges re-runs the batch; the
     already-committed table skips it).
 
-    ``wide_order``: None auto-enables the DECIMAL order key from the
-    manifest's ``max_tx_rows`` — same contract as cdc.replay.replay
-    (ADVICE r5: the multi path previously always used the clamped
-    narrow order)."""
+    ``broadcast_winners`` and ``wide_order``: None auto-selects, by the
+    same rules as cdc.replay.replay (``batch_broadcast``,
+    ``manifest_wide_order``)."""
+    from ..decoder.chunks import GENERIC_SPAN_TARGET, decode_parallelism
+
     if wide_order is None:
-        try:
-            from ..decoder.chunks import read_manifest
-            wide_order = read_manifest(dump_dir).get(
-                "max_tx_rows", 0) > 32767
-        except (OSError, ValueError, KeyError):
-            wide_order = False
+        wide_order = manifest_wide_order(dump_dir)
     all_chunks = [tuple(r) for r in chunks_df(spark, dump_dir).collect()]
     # small dumps: header-hop the registry on the driver (no Spark job);
     # larger dumps: distributed scan with byte-derived task sizing
@@ -637,33 +631,13 @@ def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
         bid = _batch_id(dump_dir, i, [s[1:] for s in spans])
         if all(bid in t.committed_batch_ids() for t in tables.values()):
             continue
-        cdf = spans_df(spark, spans)
-        if broadcast_winners is None:
-            from .pipeline import BROADCAST_WINNERS_MIN_BYTES
-            bw = (sum(int(sp[3]) for sp in spans)
-                  >= BROADCAST_WINNERS_MIN_BYTES)
-        else:
-            bw = broadcast_winners
-        if partitions is None:
-            from ..decoder.chunks import (GENERIC_SPAN_TARGET,
-                                          decode_parallelism)
-            parts = decode_parallelism(spark, spans,
-                                       target=GENERIC_SPAN_TARGET)
-        else:
-            parts = partitions
-        events = decode_changes_vals(cdf, partitions=parts)
-        staging = os.path.join(lake_root, f".batch-{bid}")
-        # ONE decode execution per batch: stage partitioned by table so
-        # every per-table reduction reads only its own partition dirs
-        partials = stage_events(events, staging,
-                                est_bytes=sum(int(s[3]) for s in spans))
-        last_file = max(s[1] for s in spans)
-        last_end = max(s[2] + s[3] for s in spans if s[1] == last_file)
-        apply_staged_batch(spark, staging, registry, tables, bid,
-                           offsets={"log_file": last_file,
-                                    "next_pos": int(last_end)},
-                           broadcast_winners=bw,
-                           wide_order=wide_order,
-                           partial_tables=partials)
-        shutil.rmtree(staging, ignore_errors=True)
+        apply_generic_batch(
+            spark, spans_df(spark, spans),
+            os.path.join(lake_root, f".batch-{bid}"), registry, tables, bid,
+            partitions=decode_parallelism(spark, spans,
+                                          target=GENERIC_SPAN_TARGET),
+            est_bytes=sum(int(s[3]) for s in spans),
+            offsets=span_offsets(spans),
+            broadcast_winners=batch_broadcast(spans, broadcast_winners),
+            wide_order=wide_order)
     return tables

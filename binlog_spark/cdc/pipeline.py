@@ -304,12 +304,7 @@ def reduce_changes_minimal(events: DataFrame,
     ``key_events``: optionally a cheap key-only decode of the same
     chunks (decoder.kernel.decode_keys) — the key-move EDGE probe runs
     on it instead of the full decode, so payload bytes are decoded
-    exactly once (inside the single reduction pass).
-
-    The returned DataFrame carries ``_persisted_source`` for API
-    compatibility (always None: the reduction no longer caches the
-    decode — a payload-string cache build costs more than one extra
-    key-only pass); ``release_minimal`` remains a safe no-op."""
+    exactly once (inside the single reduction pass)."""
     payload = ["commit", "lang", "content", *(extra_names or [])]
     good, _bad = quarantine_bad_crc(events)
     good = with_key_change_tombstones(good)
@@ -752,19 +747,7 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
         *[F.col("_top")[c].alias(c) for c in ORDER_COLS],
         F.col("_top")["gtid"].alias("gtid"),
         F.col("_top")["ts_sec"].alias("ts_sec"))
-    # no cached decode to release (single-pass; see above); kept for API
-    # compatibility with release_minimal callers
-    out._persisted_source = None
     return out
-
-
-def release_minimal(upserts: DataFrame) -> None:
-    """Unpersist the decoded batch reduce_changes_minimal cached — call
-    once the terminal action (the MERGE) has consumed the reduction, or a
-    long-running stream leaks one cached DataFrame per micro-batch."""
-    src = getattr(upserts, "_persisted_source", None)
-    if src is not None:
-        src.unpersist()
 
 
 def flatten_extras(upserts: DataFrame,

@@ -3,15 +3,25 @@
 The distributed counterpart of the reference's caller loop
 (Seek → NextEvent → NextRow → apply, /root/reference/doc.go:33-66), with
 the dump/resume semantics of /root/reference/dump.go:14-125 lifted to
-checkpointed, idempotent batch commits:
+checkpointed, idempotent batch commits.
 
-  * batches are deterministic chunk ranges (so batch_ids are stable)
-  * each batch: decode → quarantine → GTID-dedup → last-writer-wins
-    → MERGE into the lake table
-  * a batch whose batch_id is already committed is skipped (exactly-once
-    under retries/restarts)
-  * resume-from-checkpoint = skip committed batches and continue
-  * per-partition lineage + metrics parquet per batch (SURVEY §7 Phase 5)
+``apply_batch`` is the single-table apply core: one batch of binlog bytes
+(chunk spans, or raw file blobs from the streaming tail) goes through
+key-only and full decode → FULL or MINIMAL reduction → schema-evolution
+flatten → optional per-file lineage → MERGE into the lake table.  Two
+thin loops drive it:
+
+  * ``replay``: deterministic chunk-range batches (so batch_ids are
+    stable); a batch whose batch_id is already committed is skipped
+    (exactly-once under retries/restarts, resume = skip and continue);
+    each commit records the batch's resume offsets
+  * ``streaming.tail.stream_apply``: one micro-batch of binlog files per
+    ``foreachBatch`` call
+
+The per-batch policies both loops share are decided here once:
+``manifest_wide_order`` (the order-key width), ``span_offsets`` (the
+resume position after a span batch) and ``batch_broadcast`` (the winner
+broadcast rule for span batches; the tails broadcast always).
 """
 
 from __future__ import annotations
@@ -23,12 +33,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..decoder.chunks import chunks_df, spans_df
+from ..decoder.chunks import chunks_df, read_manifest, spans_df
 from ..decoder.kernel import decode_changes, decode_keys
 from ..lake.table import LakeTable
 from .pipeline import (flatten_extras, reduce_changes,
-                       reduce_changes_minimal, release_minimal,
-                       scan_extra_columns)
+                       reduce_changes_minimal, scan_extra_columns)
 
 
 def _batch_id(dump_dir: str, idx: int, spans: list) -> str:
@@ -43,8 +52,41 @@ def plan_batches(chunks: list[tuple], chunks_per_batch: int | None) -> list[list
             for i in range(0, len(chunks), chunks_per_batch)]
 
 
-def write_lineage(events: DataFrame, table_root: str, batch_id: str) -> dict:
-    """Per-file lineage rows + batch metrics (counts never silently lost)."""
+def manifest_wide_order(dump_dir: str) -> bool:
+    """Whether the dump needs the DECIMAL order key (no 32767 seq clamp):
+    true when its manifest records a transaction of more than 32767
+    rows.  A dump without a manifest keeps the narrow packed BIGINT;
+    foreign dumps with such transactions must say so explicitly."""
+    try:
+        return read_manifest(dump_dir).get("max_tx_rows", 0) > 32767
+    except (OSError, ValueError, KeyError):
+        return False
+
+
+def span_offsets(spans: list[tuple]) -> dict:
+    """Resume position after a batch of chunk spans: the end of the last
+    span of the batch's last file."""
+    last_file = max(s[1] for s in spans)
+    last_end = max(s[2] + s[3] for s in spans if s[1] == last_file)
+    return {"log_file": last_file, "next_pos": int(last_end)}
+
+
+def batch_broadcast(spans: list[tuple], override: bool | None) -> bool:
+    """``broadcast_winners`` for one span batch: ``override`` when set,
+    else broadcast only when the batch holds at least
+    BROADCAST_WINNERS_MIN_BYTES of binlog input.  A small batch takes the
+    shuffle plan, which runs as one job with no checkpoint
+    materializations (measured ~30% faster at <=76 MB batches, identical
+    fingerprints; the broadcast plan stays ~2x faster at 1.5 GB)."""
+    from .pipeline import BROADCAST_WINNERS_MIN_BYTES
+    if override is not None:
+        return override
+    return sum(int(sp[3]) for sp in spans) >= BROADCAST_WINNERS_MIN_BYTES
+
+
+def write_lineage(events: DataFrame, table_root: str, batch_id: str) -> None:
+    """Per-file lineage rows for one batch: events decoded, events
+    quarantined (bad CRC) and the log position range of each file."""
     agg = (events.groupBy("log_file")
            .agg(F.count("*").alias("events_decoded"),
                 F.sum(F.when(~F.col("crc_ok"), 1).otherwise(0)).alias("events_quarantined"),
@@ -53,17 +95,53 @@ def write_lineage(events: DataFrame, table_root: str, batch_id: str) -> dict:
            .withColumn("batch_id", F.lit(batch_id)))
     out = os.path.join(table_root, "lineage", batch_id)
     agg.write.mode("overwrite").parquet(out)
-    rows = agg.collect()
-    return {
-        "events_decoded": sum(r.events_decoded for r in rows),
-        "events_quarantined": sum(r.events_quarantined for r in rows),
-        "files": len(rows),
-    }
+
+
+def apply_batch(spark: SparkSession, table: LakeTable, source: DataFrame,
+                batch_id: str, *, extra_names: list[str],
+                minimal_images: bool = False,
+                broadcast_winners: bool = True,
+                wide_order: bool = False, salt_buckets: int = 0,
+                partitions: int | None = None,
+                offsets: dict | None = None,
+                lineage: bool = False) -> dict:
+    """Apply one batch of binlog bytes to a single-table lake table;
+    returns the MERGE's snapshot (``{"skipped": True}`` when the batch id
+    is already committed).
+
+    ``source`` is what the kernel decoder reads: chunk spans or raw file
+    blobs.  ``extra_names`` are the schema-evolution columns the caller
+    discovered from the batch's TABLE_MAPs (never by executing the
+    pipeline).  ``minimal_images``: partial after-images are column
+    PATCHES, reduced per column (reduce_changes_minimal) and coalesced
+    with the existing rows by the MERGE."""
+    events = decode_changes(source, partitions=partitions)
+    # late materialization: the winner search (and the MINIMAL key-move
+    # edge probe) runs on the cheap key-only decode, so payload bytes are
+    # decoded once, inside the reduction
+    keys = decode_keys(source, partitions=partitions)
+    if minimal_images:
+        upserts = reduce_changes_minimal(
+            events, extra_names=extra_names,
+            broadcast_winners=broadcast_winners, key_events=keys,
+            wide_order=wide_order)
+    else:
+        upserts = reduce_changes(events, salt_buckets=salt_buckets,
+                                 key_events=keys,
+                                 broadcast_winners=broadcast_winners,
+                                 wide_order=wide_order)
+        upserts, _new_cols = flatten_extras(upserts, names=extra_names)
+    if lineage:
+        # lineage re-runs the decode (cheap, embarrassingly parallel)
+        # rather than caching the event stream — a DataFrame cache build
+        # costs more than a second decode pass at scale
+        write_lineage(events, table.root, batch_id)
+    return table.merge(spark, upserts, batch_id=batch_id, offsets=offsets)
 
 
 def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
            chunks_per_batch: int | None = None, salt_buckets: int = 0,
-           n_buckets: int = 32, partitions: int | None = None,
+           n_buckets: int = 32,
            lineage: bool = True,
            compact_every: int | None = None,
            compact_tombstone_ratio: float | None = None,
@@ -78,95 +156,45 @@ def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
     exceed the given fraction of live rows (see LakeTable.maybe_compact).
 
     ``minimal_images``: the dump was written under
-    binlog_row_image=MINIMAL — partial after-images are column PATCHES;
-    the reduction runs per column (reduce_changes_minimal) and the MERGE
-    coalesces unresolved columns from the existing rows.
+    binlog_row_image=MINIMAL (see ``apply_batch``).
 
-    ``broadcast_winners``: None (default) auto-selects per batch — the
-    per-key winner sets broadcast only when the batch is large enough
-    (>= BROADCAST_WINNERS_MIN_BYTES of binlog input) that re-shuffling
-    the payload stream would dominate; a small batch takes the shuffle
-    plan, which runs as one job with no checkpoint materializations
-    (measured ~30% faster at <=76 MB batches, identical fingerprints;
-    the broadcast plan stays ~2x faster at 1.5 GB).
+    ``broadcast_winners``: None (default) auto-selects per batch by input
+    bytes (``batch_broadcast``).
 
     ``wide_order``: DECIMAL order key with no 32767 seq clamp, for
     single transactions beyond 32k rows on one key (pack_ord wide).
-    None (default) auto-enables from the dump manifest's
-    ``max_tx_rows``; pass True explicitly for foreign dumps without a
-    manifest.  Chunk spans are transaction-aligned, so a transaction
-    never splits across batches and the lake MERGE's cross-batch winner
-    search stays on the narrow packed BIGINT.
+    None (default) auto-enables from the dump manifest
+    (``manifest_wide_order``); pass True explicitly for foreign dumps
+    without a manifest.  Chunk spans are transaction-aligned, so a
+    transaction never splits across batches and the lake MERGE's
+    cross-batch winner search stays on the narrow packed BIGINT.
     """
+    # looked up at call time: per-layer tracing wraps the module attribute
+    from ..decoder.chunks import decode_parallelism
+
     if wide_order is None:
-        try:
-            from ..decoder.chunks import read_manifest
-            wide_order = read_manifest(dump_dir).get(
-                "max_tx_rows", 0) > 32767
-        except (OSError, ValueError, KeyError):
-            wide_order = False
+        wide_order = manifest_wide_order(dump_dir)
     table = LakeTable(table_root, n_buckets=n_buckets)
     table.create()
     all_chunks = [tuple(r) for r in
                   chunks_df(spark, dump_dir).collect()]
     committed = table.committed_batch_ids()
-    batches = plan_batches(all_chunks, chunks_per_batch)
 
-    for i, spans in enumerate(batches):
+    for i, spans in enumerate(plan_batches(all_chunks, chunks_per_batch)):
         bid = _batch_id(dump_dir, i, [s[1:] for s in spans])
         if bid in committed:
             continue
-        cdf = spans_df(spark, spans)
-        if broadcast_winners is None:
-            from .pipeline import BROADCAST_WINNERS_MIN_BYTES
-            bw = (sum(int(sp[3]) for sp in spans)
-                  >= BROADCAST_WINNERS_MIN_BYTES)
-        else:
-            bw = broadcast_winners
-        if partitions is None:
-            from ..decoder.chunks import decode_parallelism
-            parts = decode_parallelism(spark, spans)
-        else:
-            parts = partitions
-        events = decode_changes(cdf, partitions=parts)
         # schema evolution: extras observed in this batch become real
         # columns; the MERGE widens the table schema accordingly.  Names
-        # come from a driver-side TABLE_MAP scan — never from executing
-        # the pipeline.
-        extra_names = scan_extra_columns(spans)
-        if minimal_images:
-            # key-only decode feeds the edge probe so payload bytes are
-            # decoded once (into the reduction's stream checkpoint)
-            upserts = reduce_changes_minimal(
-                events, extra_names=extra_names,
-                broadcast_winners=bw,
-                key_events=decode_keys(cdf, partitions=parts),
-                wide_order=wide_order)
-        else:
-            # late materialization: winner search runs on the cheap
-            # key-only decode; the full decode is joined against the
-            # winner set once
-            keys = decode_keys(cdf, partitions=parts)
-            upserts = reduce_changes(events, salt_buckets=salt_buckets,
-                                     key_events=keys,
-                                     broadcast_winners=bw,
-                                     wide_order=wide_order)
-            upserts, _new_cols = flatten_extras(upserts, names=extra_names)
-        last_file = max(s[1] for s in spans)
-        last_end = max(s[2] + s[3] for s in spans if s[1] == last_file)
-        offsets = {"log_file": last_file, "next_pos": int(last_end)}
-        # lineage re-runs the decode (cheap, embarrassingly parallel)
-        # rather than caching the event stream — a DataFrame cache build
-        # costs more than a second decode pass at scale
-        metrics = write_lineage(events, table_root, bid) if lineage else {}
-        try:
-            snap = table.merge(spark, upserts, batch_id=bid,
-                               offsets=offsets)
-        finally:
-            # release even when the merge raises — a retrying caller
-            # would otherwise stack one cached decode per attempt
-            release_minimal(upserts)
-        snap.setdefault("stats", {}).update(metrics)
+        # come from a driver-side TABLE_MAP scan
+        apply_batch(spark, table, spans_df(spark, spans), bid,
+                    extra_names=scan_extra_columns(spans),
+                    minimal_images=minimal_images,
+                    broadcast_winners=batch_broadcast(spans,
+                                                      broadcast_winners),
+                    wide_order=wide_order, salt_buckets=salt_buckets,
+                    partitions=decode_parallelism(spark, spans),
+                    offsets=span_offsets(spans), lineage=lineage)
         if compact_every or compact_tombstone_ratio:
             table.maybe_compact(spark, every_n_commits=compact_every,
                                 tombstone_ratio=compact_tombstone_ratio)
@@ -179,7 +207,6 @@ def replay_throughput(spark: SparkSession, dump_dir: str, table_root: str,
     t0 = time.time()
     table = replay(spark, dump_dir, table_root, **kw)
     wall = time.time() - t0
-    from ..decoder.chunks import read_manifest
     n = read_manifest(dump_dir)["n_changes"]
     return {"wall_sec": wall, "changes": n,
             "changes_per_sec": n / wall if wall else float("inf"),

@@ -301,15 +301,6 @@ class LakeTable:
         commit_id = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.data_dir, commit_id)
         obs = Observation(f"merge-{commit_id}")
-        _timing = os.environ.get("SPARK_GRAFT_MERGE_TIMING") == "1"
-        _t0 = time.time()
-
-        def _tick(label: str) -> None:
-            nonlocal _t0
-            if _timing:
-                print(f"    merge[{label}] {time.time() - _t0:.2f}s",
-                      flush=True)
-                _t0 = time.time()
         # one write task per bucket: at n_buckets//2 the write stage ran
         # half the cluster idle (16 tasks on 32 cores cost 5.7 s wall at
         # sf0.1); bucket-partitioned files stay one-per-bucket-per-task
@@ -327,7 +318,6 @@ class LakeTable:
             # present_cols is merge metadata, never persisted
             (src.drop(*extra_sel).repartition(n_parts, "bucket")
              .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
-            _tick("empty-write")
             by_bucket = self._bucket_files(out_dir)
             touched = sorted(by_bucket)
             staging_dir = None
@@ -337,8 +327,12 @@ class LakeTable:
             (src.repartition(n_parts, "bucket")
              .write.partitionBy("bucket").mode("overwrite")
              .parquet(staging_dir))
-            _tick("staging-write")
             touched = sorted(self._bucket_files(staging_dir))
+            by_bucket = {}
+        # an empty batch stages no bucket (and parquet cannot infer a
+        # schema from the empty staging dir): nothing to read or rewrite,
+        # the commit carries every old bucket forward
+        if staging_dir and touched:
             touched_files = [f for b in touched
                              for f in old_buckets.get(str(b), [])]
             staged = spark.read.option("basePath", staging_dir) \
@@ -441,7 +435,6 @@ class LakeTable:
                 merged = staged.withColumn("bucket", self._bucket_col())
             (merged.repartition(max(len(touched), 1), "bucket")
              .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
-            _tick("merge-write")
             by_bucket = self._bucket_files(out_dir)
 
         new_buckets = dict(old_buckets)
@@ -462,7 +455,6 @@ class LakeTable:
             bucket_rows[str(b)] = sum(_parquet_rows(f)
                                       for f in by_bucket.get(b, []))
         rows_stored = sum(bucket_rows.values())
-        _tick("footers")
 
         row = obs.get
         n_up, n_del = int(row["n"] or 0), int(row["d"] or 0)

@@ -104,24 +104,34 @@ def test_composite_pk_partial_key_move(spark, tmp_path):
     assert got == want
 
 
-def test_empty_staged_batch_commits(spark, dump, tmp_path):
+@pytest.mark.parametrize("populated", [False, True],
+                         ids=["empty_tables", "populated_tables"])
+def test_empty_staged_batch_commits(spark, dump, tmp_path, populated):
     """A batch of only statement/DDL transactions stages ZERO row events
     (a partitioned parquet dir with no part files): every table must
     still commit the batch id via an empty merge instead of crashing on
-    schema inference."""
+    schema inference — both into empty tables and into tables that
+    already hold a replayed batch, whose rows must survive."""
     import os
 
     from binlog_spark.cdc.multi import (apply_staged_batch, ensure_tables,
                                         scan_table_registry)
     reg = scan_table_registry(spark, chunks_df(spark, dump))
     lake = str(tmp_path / "lake")
+    if populated:
+        replay_generic(spark, dump, lake, n_buckets=2)
     tables = ensure_tables(lake, reg, n_buckets=2)
+    before = {k: _lake_state(spark, t) for k, t in tables.items()}
     staging = str(tmp_path / "staging")
     os.makedirs(staging)
     open(os.path.join(staging, "_SUCCESS"), "w").close()
-    apply_staged_batch(spark, staging, reg, tables, "empty-batch")
-    for t in tables.values():
+    apply_staged_batch(spark, staging, reg, tables, "empty-batch",
+                       partial_tables=set())
+    for k, t in tables.items():
         assert "empty-batch" in t.committed_batch_ids()
+        assert _lake_state(spark, t) == before[k]
+    if populated:
+        assert any(before.values())
 
 
 def test_table_upserts_minimal_unit(spark, dump):
@@ -143,5 +153,3 @@ def test_table_upserts_minimal_unit(spark, dump):
     patched = [r for r in rows if r.present_cols is not None]
     for r in patched[:20]:
         assert set(r.present_cols.split(",")) <= ({"name", "email"} | {""})
-    from binlog_spark.cdc.pipeline import release_minimal
-    release_minimal(up)

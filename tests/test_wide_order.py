@@ -12,19 +12,31 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 from binlog_spark.cdc.pipeline import state_fingerprint
 from binlog_spark.cdc.replay import replay
 from binlog_spark.decoder.chunks import read_manifest
+from binlog_spark.lake.table import LakeTable
 from binlog_spark.mysql import gen, oracle
 from binlog_spark.mysql.gen import Change, StaticScript
+from binlog_spark.streaming.tail import stream_apply
 
 
-def test_mega_tx_replays_to_oracle_parity(spark, tmp_path):
+def _drain(spark, dump_dir, root, ckpt):
+    q = stream_apply(spark, dump_dir, root, ckpt, n_buckets=4,
+                     available_now=True)
+    q.awaitTermination(300)
+    return LakeTable(root)
+
+
+@pytest.mark.parametrize("driver", ["replay", "stream_apply"])
+def test_mega_tx_replays_to_oracle_parity(spark, tmp_path, driver):
     """33k sequential updates to one key inside ONE transaction: the
     last write must win exactly (auto-widened order), matching the
-    sequential oracle."""
+    sequential oracle — through batch replay and the streaming tail."""
     n = 33_000
     changes = [Change("I", "org/w", "big.py", "c0", "py", "v0")]
     changes += [Change("U", "org/w", "big.py", f"c{i}", "py", f"v{i}")
@@ -38,7 +50,10 @@ def test_mega_tx_replays_to_oracle_parity(spark, tmp_path):
 
     want = oracle.state_digest(oracle.final_state(d))
     root = str(tmp_path / "widelake")
-    table = replay(spark, d, root, n_buckets=4, lineage=False)
+    if driver == "replay":
+        table = replay(spark, d, root, n_buckets=4, lineage=False)
+    else:
+        table = _drain(spark, d, root, str(tmp_path / "wideckpt"))
     state = table.read(spark)
     assert state_fingerprint(state) == want
     rows = state.collect()
